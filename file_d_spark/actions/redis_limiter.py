@@ -416,11 +416,9 @@ def _maybe_save_limits(path: str, snapshot: dict, backend_cfg: dict) -> None:
     swallowed like the reference's logged-and-continue."""
     import time
 
-    from file_d_spark.actions.throttle import _parse_duration_seconds
+    from file_d_spark.xtime import parse_duration_s
 
-    interval = _parse_duration_seconds(
-        backend_cfg.get("limits_save_interval"), 3.0
-    )
+    interval = parse_duration_s(backend_cfg.get("limits_save_interval", "3s"))
     now = time.monotonic()
     last = _LAST_LIMITS_SAVE.get(path)
     if last is not None and now - last < interval:

@@ -22,10 +22,11 @@ Batch semantics:
                sequential replay per (key, bucket, rule) because
                default-reserve stealing is order-dependent — since
                r13 a JVM-side generated ``aggregate()`` fold (no
-               Python in the plan); an Arrow applyInPandas replay
-               remains as the fallback for schemas with unorderable
-               column types (maps, variants, …) and as the A/B
-               parity harness (``exact_backend: arrow``).
+               Python in the plan); schemas with unorderable column
+               types (maps, variants, …) take an Arrow applyInPandas
+               replay instead — the schema alone picks the backend.
+               The config is compiled once (``Throttle._stage``) into
+               the same staged columns for batch and stream.
   cardinality  per-key distinct count of a field; keys over ``limit``
                either drop their events, lose the field, or pass.
   antispam     per-(source, maintenance-window) counts; sources over
@@ -41,22 +42,7 @@ from pyspark.sql import functions as F
 from file_d_spark import xtime
 from file_d_spark.actions.base import Action, register
 from file_d_spark.fields import get_col_safe, parse_selector
-
-
-def _parse_duration_seconds(v, default: float) -> float:
-    if v is None:
-        return default
-    if isinstance(v, (int, float)):
-        return float(v)
-    s = str(v).strip()
-    units = {"ns": 1e-9, "us": 1e-6, "ms": 1e-3, "s": 1.0, "m": 60.0, "h": 3600.0, "d": 86400.0}
-    import re
-
-    m = re.fullmatch(r"([\d.]+)\s*([a-z]*)", s)
-    if not m:
-        return default
-    num, unit = float(m.group(1)), m.group(2) or "s"
-    return num * units.get(unit, 1.0)
+from file_d_spark.streaming.stateful import admit_sequential, bucket_id
 
 
 def _validate_distribution(dist: dict) -> None:
@@ -95,6 +81,11 @@ def _rule_dlims(spec: dict) -> list[int] | None:
     return [round(def_ratio * spec["limit"])] + dlims
 
 
+def _rule_cfgs(specs: list[dict]) -> list[dict]:
+    """Per-rule limiter config for ``admit_sequential``."""
+    return [{"limit": int(s["limit"]), "dlims": _rule_dlims(s)} for s in specs]
+
+
 def _type_unorderable(dt) -> bool:
     """True if the type tree contains a type Catalyst can't order —
     structs with such fields can't go through array_sort, so the JVM
@@ -124,8 +115,8 @@ def _didx_expr(specs: list[dict], schema) -> Column:
     """Per-row distribution index: 0 = the matched rule's default
     group, j+1 = its ratios[j] (idxByKey semantics), -1 for rules
     without a distribution — ONE definition shared by the Arrow
-    replay, the JVM fold, and the streaming state path so the three
-    backends cannot desynchronize."""
+    replay, the JVM fold, and the streaming state path (staged once by
+    ``Throttle._stage``) so the three backends cannot desynchronize."""
     didx = F.lit(-1)
     for i, s in enumerate(specs):
         d = s["dist"]
@@ -158,8 +149,8 @@ def _counted_expr(specs: list[dict], size_col: Column) -> Column:
 def _dist_fold_sql(spec: dict, evs: str = "__evs__") -> str:
     """One rule's sequential-admission replay as a Spark SQL
     ``aggregate()`` fold over the sorted event array — the JVM twin of
-    ``_admit_exact``'s Python loop (in_memory_limiter.go isAllowed +
-    getDistrData), generated as SQL text (the product_quantize
+    the Python limiter loop ``admit_sequential`` (in_memory_limiter.go
+    isAllowed + getDistrData), generated as SQL text (the product_quantize
     pattern: one expr, no py4j Column-building per step).
 
     Accumulator: (occ array<bigint> — per-distribution bucket
@@ -177,7 +168,7 @@ def _dist_fold_sql(spec: dict, evs: str = "__evs__") -> str:
     without consuming budget, so a group flooded with empty-field
     events degrades the kept copy to quadratic (admission results
     stay correct and Arrow-identical; only the linearity bound
-    weakens — the Arrow backend is the escape hatch for that shape)."""
+    weakens)."""
     lim = int(spec["limit"])
     if lim < 0:
         return evs  # negative limit = unlimited: every event admitted
@@ -239,36 +230,36 @@ def _require_ungated_stream(pred: Column | None, name: str) -> None:
 
 @register("throttle")
 class Throttle(Action):
-    def apply_impl(self, df: DataFrame, pred: Column | None) -> DataFrame:
-        if df.isStreaming:
-            return self._apply_stream(df, pred)
-        key_field = self.params.get("throttle_field", "")
+    def _stage(self, df: DataFrame) -> tuple[DataFrame, list[dict], float]:
+        """Compile the config ONCE for both the batch and the stream
+        backend.  Returns (staged frame, rule specs, bucket seconds);
+        the staged frame carries ``__fd_rule__`` (first matching rule),
+        ``__fd_cnt__`` (counted value), ``__fd_didx__`` (distribution
+        index), ``__fd_ts__`` (parsed event time) and ``__fd_bucket__``
+        (bucket id)."""
+        limit = int(self.params.get("default_limit", 5000))
+        size_field = self.params.get("limit_size_field", "")
         time_field = self.params.get("time_field", "time")
         time_fmt = self.params.get("time_field_format", "rfc3339nano")
-        bucket_s = _parse_duration_seconds(self.params.get("bucket_interval"), 60.0)
-        buckets_count = int(self.params.get("buckets_count", 60))
-        limit = int(self.params.get("default_limit", 5000))
-        limit_kind = self.params.get("limit_kind", "count")
-        size_field = self.params.get("limit_size_field", "")
+        bucket_s = xtime.parse_duration_s(self.params.get("bucket_interval", "1m"))
 
         # rule list: config rules in order, then the implicit default
         # rule (matches everything) — first match wins, and each rule
         # owns its own limiters (throttle.go:117-125,467-475: limiter
         # key embeds the rule index, so counting is per (rule, key))
-        specs = []
-        for rcfg in self.params.get("rules") or []:
-            specs.append(
-                {
-                    "limit": int(rcfg.get("limit", limit)),
-                    "kind": rcfg.get("limit_kind", "count"),
-                    "conditions": rcfg.get("conditions") or {},
-                    "dist": rcfg.get("limit_distribution") or {},
-                }
-            )
+        specs = [
+            {
+                "limit": int(rcfg.get("limit", limit)),
+                "kind": rcfg.get("limit_kind", "count"),
+                "conditions": rcfg.get("conditions") or {},
+                "dist": rcfg.get("limit_distribution") or {},
+            }
+            for rcfg in self.params.get("rules") or []
+        ]
         specs.append(
             {
                 "limit": limit,
-                "kind": limit_kind,
+                "kind": self.params.get("limit_kind", "count"),
                 "conditions": {},
                 "dist": self.params.get("limit_distribution") or {},
             }
@@ -276,19 +267,6 @@ class Throttle(Action):
         for s in specs:
             if s["dist"].get("field") or s["dist"].get("ratios"):
                 _validate_distribution(s["dist"])
-
-        key = (
-            get_col_safe(parse_selector(key_field), df.schema).cast("string")
-            if key_field
-            else F.lit("")
-        )
-        tcol = get_col_safe(parse_selector(time_field), df.schema)
-        from pyspark.sql import types as T
-
-        t = df.schema[time_field].dataType if time_field in df.columns else None
-        # loud on un-timestampable types; parse failures -> null bucket
-        # (never backfill wall clock — see round-2 postmortem)
-        ts = xtime.ensure_timestamp(tcol, t, time_fmt, context="throttle time_field")
 
         # first matching rule index (conditions are an AND field map,
         # rule.go:50-59: string equality per field)
@@ -304,7 +282,6 @@ class Throttle(Action):
             rule_idx = F.when(rule_cond(specs[i]["conditions"]), F.lit(i)).otherwise(
                 rule_idx
             )
-
         size_col = (
             F.octet_length(
                 get_col_safe(parse_selector(size_field), df.schema).cast("string")
@@ -312,27 +289,40 @@ class Throttle(Action):
             if size_field
             else F.lit(1)
         )
+        tcol = get_col_safe(parse_selector(time_field), df.schema)
+        t = df.schema[time_field].dataType if time_field in df.columns else None
+        # loud on un-timestampable types; parse failures -> null bucket
+        # (never backfill wall clock — see round-2 postmortem)
+        ts = xtime.ensure_timestamp(tcol, t, time_fmt, context="throttle time_field")
+        # two projection hops (Catalyst collapses them): the counted /
+        # distribution / bucket columns read the rule index and time
+        staged = df.withColumns(
+            {"__fd_rule__": rule_idx, "__fd_ts__": ts}
+        ).withColumns(
+            {
+                "__fd_cnt__": _counted_expr(specs, size_col),
+                "__fd_didx__": _didx_expr(specs, df.schema),
+                "__fd_bucket__": bucket_id(F.col("__fd_ts__"), bucket_s),
+            }
+        )
+        return staged, specs, bucket_s
 
-        # micros-based buckets so sub-second intervals (100ms in the
-        # reference tests) don't truncate to a zero-width bucket
-        bucket_us = max(1, int(bucket_s * 1e6))
-        bucket = F.floor(F.unix_micros(ts) / F.lit(bucket_us))
+    def apply_impl(self, df: DataFrame, pred: Column | None) -> DataFrame:
+        if df.isStreaming:
+            return self._apply_stream(df, pred)
+        key_field = self.params.get("throttle_field", "")
+        buckets_count = int(self.params.get("buckets_count", 60))
+        key = (
+            get_col_safe(parse_selector(key_field), df.schema).cast("string")
+            if key_field
+            else F.lit("")
+        )
         # rows failing the gate bypass the action entirely: always kept,
         # never counted against any limit (processor.go:190-243 semantics)
         match = F.lit(True) if pred is None else pred
-        # one projection hop for all five helper columns: the helpers
-        # derive only from pre-existing event columns, so the batched
-        # withColumns is equivalent to the chained form (r13 — each
-        # chained withColumn was a fresh DataFrame + py4j round trips)
-        df = df.withColumns(
-            {
-                "__fd_key__": key,
-                "__fd_bucket__": bucket,
-                "__fd_ts__": ts,
-                "__fd_m__": match,
-                "__fd_rule__": rule_idx,
-            }
-        )
+        df, specs, bucket_s = self._stage(df)
+        limit = specs[-1]["limit"]
+        df = df.withColumns({"__fd_key__": key, "__fd_m__": match})
         # bucket-ring clamp (buckets.go:231-235 rebuildBuckets: "events
         # from past or future goes to the latest bucket" — they are
         # counted there, NOT dropped).  The batch analogue of the wall
@@ -342,7 +332,7 @@ class Throttle(Action):
             F.max("__fd_ts__").alias("__fd_hmax__")
         )
         df = df.crossJoin(F.broadcast(hmax))
-        max_bucket = F.floor(F.unix_micros("__fd_hmax__") / F.lit(bucket_us))
+        max_bucket = bucket_id(F.col("__fd_hmax__"), bucket_s)
         min_bucket = max_bucket - F.lit(int(buckets_count) - 1)
         df = df.withColumn(
             "__fd_bucket__",
@@ -354,47 +344,32 @@ class Throttle(Action):
         )
         # arrival order within a bucket; extra order_fields give a
         # deterministic tiebreak for equal timestamps (batch mode)
-        order_cols = [F.col("__fd_ts__")] + [
-            F.col(c) for c in self.params.get("order_fields", [])
-        ]
+        order_fields = list(self.params.get("order_fields", []))
+        order_cols = [F.col("__fd_ts__")] + [F.col(c) for c in order_fields]
 
         helper_cols = [
-            "__fd_key__", "__fd_bucket__", "__fd_ts__",
-            "__fd_m__", "__fd_hmax__", "__fd_rule__",
+            "__fd_key__", "__fd_bucket__", "__fd_ts__", "__fd_m__",
+            "__fd_hmax__", "__fd_rule__", "__fd_cnt__", "__fd_didx__",
         ]
-        any_dist = any(
-            s["dist"].get("field") and s["dist"].get("ratios") for s in specs
-        )
-        if any_dist:
+        if any(_rule_dlims(s) is not None for s in specs):
             # distributions have sequential semantics — a default-group
             # event over its reserve STEALS from the most-free
             # distribution at that instant (in_memory_limiter.go
             # getDistrData) — which no window expression can replay.
             # Exact replay per (key, bucket, rule) group; parallelism
             # across groups, faithful sequential replay within one.
-            # Default backend is a JVM-side aggregate() fold (r13 —
-            # no Python in the plan); the Arrow applyInPandas replay
-            # stays as the fallback for schemas the fold's struct
-            # array_sort can't order (maps, variants) and as the A/B
-            # parity harness (exact_backend: arrow).
-            backend = self.params.get("exact_backend") or (
-                "arrow" if _type_unorderable(df.schema) else "jvm"
-            )
+            # The backend follows the schema: a JVM-side aggregate()
+            # fold (no Python in the plan) unless the fold's struct
+            # array_sort can't order the rows (maps, variants), which
+            # take the Arrow replay.
             admit = (
-                self._admit_exact_jvm if backend == "jvm" else self._admit_exact
+                self._admit_exact
+                if _type_unorderable(df.schema)
+                else self._admit_exact_jvm
             )
-            return admit(
-                df,
-                specs,
-                size_col,
-                list(self.params.get("order_fields", [])),
-                helper_cols,
-            )
+            return admit(df, specs, order_fields).drop(*helper_cols)
 
-        # per-row (counted value, limit) from the matched rule — the
-        # counted value through the SAME shared projection the
-        # dist/stream/Arrow backends use (one definition, no drift)
-        counted = _counted_expr(specs, size_col)
+        # per-row limit from the matched rule
         limit_col = F.lit(limit)
         for i, spec in enumerate(specs):
             limit_col = F.when(
@@ -582,7 +557,7 @@ class Throttle(Action):
             "__fd_key__", "__fd_bucket__", "__fd_rule__"
         ).orderBy(*order_cols)
         running = F.sum(
-            F.when(F.col("__fd_m__"), counted).otherwise(F.lit(0))
+            F.when(F.col("__fd_m__"), F.col("__fd_cnt__")).otherwise(F.lit(0))
         ).over(w.rowsBetween(Window.unboundedPreceding, 0))
         # a negative limit means unlimited (in_memory_limiter.go:66-69
         # returns true before touching the bucket ring)
@@ -595,173 +570,80 @@ class Throttle(Action):
         return out.drop("__fd_keep__", *helper_cols)
 
     def _apply_stream(self, df: DataFrame, pred: Column | None) -> DataFrame:
-        """Streaming throttle with full rule parity: the same specs /
-        rule-index / counted-value / distribution-index columns as the
-        batch path feed the keyed state function, which owns one bucket
-        ring per (key, rule) and replays distribution stealing
+        """Streaming throttle with full rule parity: the same staged
+        rule-index / counted-value / distribution-index / bucket columns
+        as the batch path feed the keyed state function, which owns the
+        bucket rings of one key and replays distribution stealing
         sequentially (the reference's limiter lock scope)."""
         _require_ungated_stream(pred, "throttle")
         from file_d_spark.streaming import throttle_stream
 
-        limit = int(self.params.get("default_limit", 5000))
-        limit_kind = self.params.get("limit_kind", "count")
-        size_field = self.params.get("limit_size_field", "")
-        specs = []
-        for rcfg in self.params.get("rules") or []:
-            specs.append(
-                {
-                    "limit": int(rcfg.get("limit", limit)),
-                    "kind": rcfg.get("limit_kind", "count"),
-                    "conditions": rcfg.get("conditions") or {},
-                    "dist": rcfg.get("limit_distribution") or {},
-                }
-            )
-        specs.append(
-            {
-                "limit": limit,
-                "kind": limit_kind,
-                "conditions": {},
-                "dist": self.params.get("limit_distribution") or {},
-            }
-        )
-        for s in specs:
-            if s["dist"].get("field") or s["dist"].get("ratios"):
-                _validate_distribution(s["dist"])
+        staged, specs, bucket_s = self._stage(df)
+        limit = specs[-1]["limit"]
         if len(specs) == 1 and limit < 0:
             return df  # negative limit = unlimited (throttle_test.go:153-181)
-
-        def rule_cond(conditions: dict) -> Column:
-            cond = F.lit(True)
-            for fld, val in conditions.items():
-                col = get_col_safe(parse_selector(str(fld)), df.schema)
-                cond = cond & (col.cast("string") == F.lit(str(val)))
-            return cond
-
-        rule_idx = F.lit(len(specs) - 1)
-        for i in reversed(range(len(specs) - 1)):
-            rule_idx = F.when(rule_cond(specs[i]["conditions"]), F.lit(i)).otherwise(
-                rule_idx
-            )
-        size_col = (
-            F.octet_length(
-                get_col_safe(parse_selector(size_field), df.schema).cast("string")
-            )
-            if size_field
-            else F.lit(1)
-        )
-        counted = _counted_expr(specs, size_col)
-        didx = _didx_expr(specs, df.schema)
-
-        rule_cfgs = [
-            {"limit": int(s["limit"]), "dlims": _rule_dlims(s)}
-            for s in specs
-        ]
-
-        # batch parity for timestamps: parse time_field through the
-        # same Go-layout machinery (time_field_format, numeric-epoch
-        # handling) BEFORE the state function — raw pd.to_datetime in
-        # the executor read numeric epoch-seconds as nanoseconds and
-        # sorted on unparsed values
-        time_field = self.params.get("time_field", "time")
-        time_fmt = self.params.get("time_field_format", "rfc3339nano")
-        tcol = get_col_safe(parse_selector(time_field), df.schema)
-        t = df.schema[time_field].dataType if time_field in df.columns else None
-        parsed_ts = xtime.ensure_timestamp(
-            tcol, t, time_fmt, context="throttle time_field"
-        )
-        staged = (
-            df.withColumn("__fd_rule__", rule_idx)
-            .withColumn("__fd_cnt__", counted)
-            .withColumn("__fd_didx__", didx)
-            .withColumn("__fd_ts__", parsed_ts)
-        )
         return throttle_stream(
             staged,
             key_col=self.params.get("throttle_field", ""),
             ts_col="__fd_ts__",
-            bucket_interval_s=int(
-                _parse_duration_seconds(self.params.get("bucket_interval"), 60.0)
-            ),
+            bucket_interval_s=bucket_s,
             buckets_count=int(self.params.get("buckets_count", 60)),
             limit=limit,
             limiter_expiration_ms=int(
-                _parse_duration_seconds(self.params.get("limiter_expiration"), 1800.0)
+                xtime.parse_duration_s(self.params.get("limiter_expiration", "30m"))
                 * 1000
             ),
-            rule_cfgs=rule_cfgs,
+            rule_cfgs=_rule_cfgs(specs),
             rule_col="__fd_rule__",
             cnt_col="__fd_cnt__",
             didx_col="__fd_didx__",
         )
 
-    def _admit_exact(self, df, specs, size_col, order_fields, helper_cols):
-        """Sequential replay of in_memory_limiter.isAllowed per
-        (key, bucket, rule) group, including default-distribution
-        stealing (getDistrData).  Arrow-batched; the group key carries
-        all the state the reference's limiter map keys on, so this
-        shards exactly like the reference's per-limiter locks."""
+    def _admit_exact(self, df, specs, order_fields):
+        """Arrow replay of the sequential admission per (key, bucket,
+        rule) group, including default-distribution stealing — the
+        backend for schemas the JVM fold can't sort.  The group key
+        carries all the state the reference's limiter map keys on, so
+        this shards exactly like the reference's per-limiter locks.
+        Gated rows bypass the replay uncounted, as in the JVM fold."""
         import pandas as pd
 
-        from pyspark.sql import functions as F
-
-        # per-rule static config for the closure
-        rule_cfgs = [
-            {"limit": int(s["limit"]), "kind": s["kind"],
-             "dlims": _rule_dlims(s)}
-            for s in specs
-        ]
-
-        df = df.withColumn(
-            "__fd_didx__", _didx_expr(specs, df.schema)
-        ).withColumn("__fd_cnt__", _counted_expr(specs, size_col))
+        rule_cfgs = _rule_cfgs(specs)
         order_names = ["__fd_ts__"] + [str(c) for c in order_fields]
-        out_schema = df.drop("__fd_didx__", "__fd_cnt__").schema
 
         def admit(pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.sort_values(order_names, kind="mergesort")
-            cfg = rule_cfgs[int(pdf["__fd_rule__"].iloc[0])]
-            dlims = cfg["dlims"]
-            buckets: dict[int, int] = {}
-            keep = []
-            for m, cnt, di in zip(
-                pdf["__fd_m__"], pdf["__fd_cnt__"], pdf["__fd_didx__"]
-            ):
-                if not m:
-                    keep.append(True)  # gate bypass: never counted
-                    continue
-                if cfg["limit"] < 0:
-                    keep.append(True)  # negative limit = unlimited
-                    continue
-                cnt = int(cnt)
-                if dlims is None:
-                    buckets[0] = buckets.get(0, 0) + cnt
-                    keep.append(buckets[0] <= cfg["limit"])
-                    continue
-                idx, lim = int(di), dlims[int(di)]
-                if idx == 0 and buckets.get(0, 0) + cnt > lim:
-                    # steal reserve from the most-free distribution
-                    maxdiff = -1
-                    for i in range(1, len(dlims)):
-                        diff = dlims[i] - (buckets.get(i, 0) + cnt)
-                        if diff > maxdiff:
-                            maxdiff, idx, lim = diff, i, dlims[i]
-                buckets[idx] = buckets.get(idx, 0) + cnt
-                keep.append(buckets[idx] <= lim)
-            return pdf[pd.Series(keep, index=pdf.index)].drop(
-                columns=["__fd_didx__", "__fd_cnt__"]
+            n = len(pdf)
+            # one (key, bucket, rule) group: the ring clamp is already
+            # applied, so a constant bucket id stands in for it
+            keep = admit_sequential(
+                rule_cfgs,
+                1,
+                pdf["__fd_rule__"].astype(int).tolist(),
+                [0] * n,
+                pdf["__fd_cnt__"].astype(int).tolist(),
+                pdf["__fd_didx__"].astype(int).tolist(),
+                {},
+                {},
             )
+            return pdf[pd.Series(keep, index=pdf.index)]
 
-        out = df.groupBy("__fd_key__", "__fd_bucket__", "__fd_rule__").applyInPandas(
-            admit, schema=out_schema
+        gated = df.filter(~F.col("__fd_m__"))
+        return (
+            df.filter(F.col("__fd_m__"))
+            .groupBy("__fd_key__", "__fd_bucket__", "__fd_rule__")
+            .applyInPandas(admit, schema=df.schema)
+            .unionByName(gated)
         )
-        return out.drop(*helper_cols)
 
-    def _admit_exact_jvm(self, df, specs, size_col, order_fields, helper_cols):
+    def _admit_exact_jvm(self, df, specs, order_fields):
         """JVM-side exact distribution replay (r13, VERDICT r12 #4):
-        the same sequential admission ``_admit_exact`` replays in
+        the same sequential admission ``admit_sequential`` replays in
         Python, expressed as ONE generated ``aggregate()`` fold per
         rule over the sorted per-(key, bucket, rule) event array — no
-        Python in the plan, no Arrow round trip.
+        Python in the plan, no Arrow round trip.  The default backend;
+        only schemas with unorderable column types take the Arrow
+        replay.
 
         Scale shape: one shuffle (the groupBy that also bounds the
         Arrow path), then a linear interpreted fold per group.  Gated
@@ -773,8 +655,6 @@ class Throttle(Action):
         event sort key is (ts, *order_fields, didx, cnt, payload) —
         a TOTAL deterministic order, strictly stronger than the Arrow
         path's stable-mergesort-on-arrival tiebreak."""
-        didx = _didx_expr(specs, df.schema)
-        counted = _counted_expr(specs, size_col)
         payload_cols = list(df.columns)
         ev = F.struct(
             F.col("__fd_ts__").alias("t"),
@@ -782,11 +662,11 @@ class Throttle(Action):
                 get_col_safe(parse_selector(str(c)), df.schema).alias(f"o{i}")
                 for i, c in enumerate(order_fields)
             ],
-            didx.cast("int").alias("d"),
-            counted.cast("bigint").alias("c"),
+            F.col("__fd_didx__").cast("int").alias("d"),
+            F.col("__fd_cnt__").cast("bigint").alias("c"),
             F.struct(*[F.col(c) for c in payload_cols]).alias("p"),
         )
-        gated = df.filter(~F.col("__fd_m__")).select(*payload_cols)
+        gated = df.filter(~F.col("__fd_m__"))
         grouped = (
             df.filter(F.col("__fd_m__"))
             .groupBy("__fd_key__", "__fd_bucket__", "__fd_rule__")
@@ -796,14 +676,13 @@ class Throttle(Action):
             f"WHEN __fd_rule__ = {i} THEN ({_dist_fold_sql(s)})"
             for i, s in enumerate(specs)
         )
-        out = (
+        return (
             grouped.select(
                 F.explode(F.expr(f"CASE {branches} END")).alias("__e__")
             )
             .select("__e__.p.*")
             .unionByName(gated)
         )
-        return out.drop(*helper_cols)
 
 
 @register("cardinality")
@@ -828,48 +707,8 @@ class Cardinality(Action):
         limit = int(self.params.get("limit", 10000))
         mode = self.params.get("action", "nothing")
         order_fields = list(self.params.get("order_fields", []))
-        if df.isStreaming:
-            _require_ungated_stream(pred, "cardinality")
-            from file_d_spark.streaming import cardinality_stream
-
-            # config ttl (cardinality.go:29, default 1m) -> the state
-            # timeout that forgets an idle key's distinct set; batch
-            # runs have no time axis inside one frame, so ttl is a
-            # streaming-only knob
-            ttl_ms = int(
-                _parse_duration_seconds(self.params.get("ttl"), 60.0) * 1000
-            )
-            # multi-key / multi-field parity with batch: composite
-            # helper columns (concat_ws over every configured key /
-            # field), dropped from the output by the state fn's
-            # helper-column exclusion
-            skey = F.concat_ws(
-                "\x01",
-                *[
-                    F.coalesce(
-                        get_col_safe(parse_selector(k), df.schema).cast(
-                            "string"
-                        ),
-                        F.lit(""),
-                    )
-                    for k in key_fields
-                ],
-            )
-            sval = F.concat_ws(
-                "\x01",
-                *[
-                    get_col_safe(parse_selector(f), df.schema).cast("string")
-                    for f in fields
-                ],
-            )
-            staged = df.withColumn("__fd_ck__", skey).withColumn(
-                "__fd_cv__", sval
-            )
-            return cardinality_stream(
-                staged, "__fd_ck__", "__fd_cv__", limit, mode,
-                ttl_ms=ttl_ms, strip_cols=list(fields),
-            )
-
+        # composite key / probe columns (concat_ws over every configured
+        # key / field), shared by the batch and the stream path
         key = F.concat_ws(
             "\x01",
             *[
@@ -887,6 +726,23 @@ class Cardinality(Action):
                 for f in fields
             ],
         )
+        if df.isStreaming:
+            _require_ungated_stream(pred, "cardinality")
+            from file_d_spark.streaming import cardinality_stream
+
+            # config ttl (cardinality.go:29, default 1m) -> the state
+            # timeout that forgets an idle key's distinct set; batch
+            # runs have no time axis inside one frame, so ttl is a
+            # streaming-only knob
+            ttl_ms = int(xtime.parse_duration_s(self.params.get("ttl", "1m")) * 1000)
+            # the helper columns are dropped from the output by the
+            # state fn's helper-column exclusion
+            staged = df.withColumns({"__fd_ck__": key, "__fd_cv__": probe})
+            return cardinality_stream(
+                staged, "__fd_ck__", "__fd_cv__", limit, mode,
+                ttl_ms=ttl_ms, strip_cols=list(fields),
+            )
+
         if mode == "nothing":
             return df
         if order_fields:
@@ -1006,8 +862,8 @@ class Antispam(Action):
         time_field = self.params.get("time_field", "ts")
         threshold = int(self.params.get("threshold", 0))
         rules = self.params.get("rules") or []
-        interval_s = _parse_duration_seconds(
-            self.params.get("maintenance_interval"), 60.0
+        interval_s = xtime.parse_duration_s(
+            self.params.get("maintenance_interval", "1m")
         )
         if threshold <= 0 and not rules:
             return df

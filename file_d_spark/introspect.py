@@ -76,8 +76,8 @@ class PipelineInspector:
         (antispammer.go:24-120 exposes the live ban map)."""
         from pyspark.sql import functions as F
 
-        from file_d_spark.actions.throttle import _parse_duration_seconds
         from file_d_spark.fields import get_col_safe, parse_selector
+        from file_d_spark.xtime import parse_duration_s
 
         out: list[dict[str, Any]] = []
         for i, cfg in enumerate(self.plan.actions):
@@ -86,9 +86,7 @@ class PipelineInspector:
             df = self.frames[i]
             src_field = cfg.get("source_field", "source_name")
             time_field = cfg.get("time_field", "ts")
-            interval_s = _parse_duration_seconds(
-                cfg.get("maintenance_interval"), 60.0
-            )
+            interval_s = parse_duration_s(cfg.get("maintenance_interval", "1m"))
             src = get_col_safe(parse_selector(src_field), df.schema).cast("string")
             tcol = get_col_safe(parse_selector(time_field), df.schema)
             ts = F.coalesce(tcol.cast("timestamp"), F.current_timestamp())

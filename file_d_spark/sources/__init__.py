@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from file_d_spark.config import PipelinePlan
 from file_d_spark.decoders import get_decoder
+from file_d_spark.xtime import parse_duration_s
 
 
 def apply_meta_templates(df: DataFrame, meta: dict[str, str]) -> DataFrame:
@@ -65,18 +66,6 @@ def _decode_lines(
     return df.select(*out_cols)
 
 
-def _duration_ms(v, default_ms: int) -> int:
-    if v is None:
-        return default_ms
-    import re as _re
-
-    m = _re.fullmatch(r"([\d.]+)\s*([a-z]*)", str(v).strip())
-    if not m:
-        return default_ms
-    units = {"ms": 1, "s": 1000, "m": 60000, "h": 3600000}
-    return int(float(m.group(1)) * units.get(m.group(2) or "s", 1000))
-
-
 def kafka_source_options(
     cfg: dict, capacity: int | None = None, streaming: bool = False
 ) -> dict[str, str]:
@@ -92,6 +81,9 @@ def kafka_source_options(
     pipeline/event.go:246-290) maps onto maxOffsetsPerTrigger when
     streaming — per-trigger admission is Spark's backpressure; an
     explicit ``max_offsets_per_trigger`` in cfg wins."""
+    def _ms(v) -> str:
+        return str(round(parse_duration_s(v) * 1000))
+
     brokers = cfg.get("brokers", "localhost:9092")
     if isinstance(brokers, (list, tuple)):
         brokers = ",".join(brokers)
@@ -107,15 +99,9 @@ def kafka_source_options(
         "includeHeaders": "true",
         "kafka.fetch.max.bytes": str(int(cfg.get("fetch_max_bytes", 52428800))),
         "kafka.fetch.min.bytes": str(int(cfg.get("fetch_min_bytes", 1))),
-        "kafka.fetch.max.wait.ms": str(
-            _duration_ms(cfg.get("consumer_max_wait_time"), 250)
-        ),
-        "kafka.session.timeout.ms": str(
-            _duration_ms(cfg.get("session_timeout"), 10000)
-        ),
-        "kafka.heartbeat.interval.ms": str(
-            _duration_ms(cfg.get("heartbeat_interval"), 3000)
-        ),
+        "kafka.fetch.max.wait.ms": _ms(cfg.get("consumer_max_wait_time", "250ms")),
+        "kafka.session.timeout.ms": _ms(cfg.get("session_timeout", "10s")),
+        "kafka.heartbeat.interval.ms": _ms(cfg.get("heartbeat_interval", "3s")),
     }
     from file_d_spark.kafka_security import kafka_security_options
 

@@ -27,7 +27,7 @@ from typing import Any, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -229,11 +229,72 @@ def multiline_join_stream(
 # ---------------------------------------------------------------------------
 
 
+def bucket_id(ts: Column, bucket_s: float) -> Column:
+    """Throttle bucket id of a timestamp column: ``floor(unix_micros /
+    bucket_us)`` — micros-based so sub-second intervals (100ms in the
+    reference tests) keep their own width.  The one definition shared
+    by the batch and the stream throttle."""
+    bucket_us = max(1, round(bucket_s * 1e6))
+    return F.floor(F.unix_micros(ts) / F.lit(bucket_us))
+
+
+def admit_sequential(
+    rule_cfgs: list[dict],
+    buckets_count: int,
+    rules: list[int],
+    buckets: list[int],
+    cnts: list[int],
+    didxs: list[int],
+    ring: dict[tuple, int],
+    newest: dict[int, int],
+) -> list[bool]:
+    """The throttle limiter loop (in_memory_limiter.go isAllowed +
+    getDistrData) over one group's events in arrival order — the one
+    Python copy, used by the streaming state function and the batch
+    Arrow replay; the batch JVM ``aggregate()`` fold is its SQL twin.
+
+    ``rule_cfgs[r]`` is ``{"limit": int, "dlims": list|None}``;
+    ``ring`` maps (rule, bucket, didx) to the counted usage and
+    ``newest`` maps a rule to its newest bucket — both are updated in
+    place, so a caller can carry them across calls.  An event older
+    than its rule's ring is CLAMPED into the newest bucket and counted
+    there (buckets.go:231-235 rebuildBuckets).  With ``dlims`` a
+    default-group event (didx 0) over its reserve steals from the
+    most-free distribution.  Returns the per-event admit flags."""
+    keep = []
+    for r, b, cnt, di in zip(rules, buckets, cnts, didxs):
+        cfg = rule_cfgs[r]
+        lim, dlims = cfg["limit"], cfg.get("dlims")
+        if lim < 0:
+            keep.append(True)  # negative limit = unlimited
+            continue
+        top = max(newest.get(r, b), b)
+        newest[r] = top
+        if b <= top - buckets_count:
+            b = top  # ring clamp: count in the latest bucket
+        if dlims is None:
+            idx, dlim = 0, lim
+        else:
+            idx, dlim = di, dlims[max(di, 0)]
+            if idx == 0 and ring.get((r, b, 0), 0) + cnt > dlim:
+                # default over its reserve steals from the most-free
+                # distribution (getDistrData)
+                maxdiff = -1
+                for i in range(1, len(dlims)):
+                    diff = dlims[i] - (ring.get((r, b, i), 0) + cnt)
+                    if diff > maxdiff:
+                        maxdiff, idx, dlim = diff, i, dlims[i]
+        n = ring.get((r, b, idx), 0) + cnt
+        ring[(r, b, idx)] = n
+        keep.append(n <= dlim)
+    return keep
+
+
 def throttle_stream(
     df: DataFrame,
     key_col: str,
     ts_col: str,
-    bucket_interval_s: int,
+    bucket_interval_s: float,
     buckets_count: int,
     limit: int,
     limiter_expiration_ms: int = 30 * 60_000,
@@ -242,16 +303,20 @@ def throttle_stream(
     cnt_col: str | None = None,
     didx_col: str | None = None,
 ) -> DataFrame:
-    """Streaming throttle: per-(key, rule) sliding ring of
-    ``buckets_count`` buckets of ``bucket_interval_s``; admits events
-    while the bucket's counted total stays within the rule's limit;
-    events outside the ring are CLAMPED into the newest bucket and
-    counted there (buckets.go:231-235 rebuildBuckets — "events from
-    past or future goes to the latest bucket").  Idle keys drop their
-    rings after ``limiter_expiration_ms`` (throttle.go:129
-    LimiterExpiration default 30m + maintenance goroutine) — without
-    this the per-key state store grows unboundedly at 100 TB key
-    cardinalities.
+    """Streaming throttle: per-key state holds the bucket ring, keyed
+    by (rule, bucket, didx), of ``buckets_count`` buckets of
+    ``bucket_interval_s``; admits events while the bucket's counted
+    total stays within the rule's limit; events outside the ring are
+    CLAMPED into the newest bucket and counted there (buckets.go:231-235
+    rebuildBuckets — "events from past or future goes to the latest
+    bucket").  Idle keys drop their rings after
+    ``limiter_expiration_ms`` (throttle.go:129 LimiterExpiration
+    default 30m + maintenance goroutine) — without this the per-key
+    state store grows unboundedly at 100 TB key cardinalities.
+
+    Bucket ids come from a ``__fd_bucket__`` column computed in the JVM
+    by ``bucket_id`` — the caller's staged one (actions/throttle.py),
+    or one derived here from ``ts_col`` when the frame has none.
 
     Full rule parity with the batch path: ``rule_cfgs`` is a list of
     ``{"limit": int, "dlims": list|None}`` — one per throttle rule,
@@ -262,10 +327,10 @@ def throttle_stream(
     default-reserve STEALING (in_memory_limiter.go getDistrData):
     ``didx_col`` maps each event to its distribution index (0 =
     default), and state tracks per-(rule, bucket, didx) usage across
-    micro-batches — the sequential semantics replay inside the keyed
-    state function exactly as they do in the reference's limiter lock.
+    micro-batches — ``admit_sequential`` replays the sequential
+    semantics inside the keyed state function exactly as they run in
+    the reference's limiter lock.
     """
-    out_schema = df.schema
     if rule_cfgs is None:
         rule_cfgs = [{"limit": int(limit), "dlims": None}]
     # keyless throttle (no throttle_field): one shared limiter for the
@@ -275,14 +340,18 @@ def throttle_stream(
     if not key_col:
         key_col = "__fd_nokey__"
         df = df.withColumn(key_col, F.lit(""))
+    if "__fd_bucket__" not in df.columns:
+        df = df.withColumn(
+            "__fd_bucket__", bucket_id(F.col(ts_col), bucket_interval_s)
+        )
     # rings serialized as parallel arrays (rule, bucket, didx) -> used
     state_schema = (
         "rules array<long>, bucket_ids array<long>, "
         "didx array<long>, used array<long>"
     )
-    # helper columns (__fd_*: staged rule/count/distribution indexes,
-    # the synthetic keyless key, the caller's pre-parsed timestamp)
-    # never appear in the output
+    # helper columns (__fd_*: staged rule/count/distribution/bucket
+    # columns, the synthetic keyless key, the caller's pre-parsed
+    # timestamp) never appear in the output
     data_cols = [
         f.name
         for f in df.schema.fields
@@ -290,6 +359,9 @@ def throttle_stream(
         and not f.name.startswith("__fd_")
     ]
     out_schema = df.select(*data_cols).schema
+
+    def ints(pdf: pd.DataFrame, name: str | None, default: int) -> list[int]:
+        return pdf[name].astype("int64").tolist() if name else [default] * len(pdf)
 
     def fn(
         key: tuple, frames: Iterator[pd.DataFrame], state: GroupState
@@ -309,54 +381,21 @@ def throttle_stream(
         else:
             ring = {}
         # per-rule newest bucket (each rule owns its own ring horizon)
-        max_bucket: dict[int, int] = {}
+        newest: dict[int, int] = {}
         for r, b, _ in ring:
-            max_bucket[r] = max(max_bucket.get(r, -1), b)
-        rule_series = (
-            pdf[rule_col].astype(int) if rule_col else pd.Series(0, index=pdf.index)
+            newest[r] = max(newest.get(r, b), b)
+        keep = admit_sequential(
+            rule_cfgs,
+            buckets_count,
+            ints(pdf, rule_col, 0),
+            ints(pdf, "__fd_bucket__", 0),
+            ints(pdf, cnt_col, 1),
+            ints(pdf, didx_col, -1),
+            ring,
+            newest,
         )
-        cnt_series = (
-            pdf[cnt_col].astype(int) if cnt_col else pd.Series(1, index=pdf.index)
-        )
-        didx_series = (
-            pdf[didx_col].astype(int) if didx_col else pd.Series(-1, index=pdf.index)
-        )
-        keep_mask = []
-        for ts, r, cnt, di in zip(
-            pd.to_datetime(pdf[ts_col]), rule_series, cnt_series, didx_series
-        ):
-            cfg = rule_cfgs[r]
-            lim, dlims = cfg["limit"], cfg.get("dlims")
-            if lim < 0:
-                keep_mask.append(True)  # negative limit = unlimited
-                continue
-            b = int(ts.timestamp()) // bucket_interval_s
-            max_bucket[r] = max(max_bucket.get(r, -1), b)
-            if b <= max_bucket[r] - buckets_count:
-                b = max_bucket[r]  # ring clamp: count in the latest bucket
-            if dlims is None:
-                n = ring.get((r, b, 0), 0) + cnt
-                ring[(r, b, 0)] = n
-                keep_mask.append(n <= lim)
-                continue
-            idx, dlim = int(di), dlims[max(int(di), 0)]
-            if idx == 0 and ring.get((r, b, 0), 0) + cnt > dlim:
-                # default over its reserve steals from the most-free
-                # distribution (getDistrData)
-                maxdiff = -1
-                for i in range(1, len(dlims)):
-                    diff = dlims[i] - (ring.get((r, b, i), 0) + cnt)
-                    if diff > maxdiff:
-                        maxdiff, idx, dlim = diff, i, dlims[i]
-            n = ring.get((r, b, idx), 0) + cnt
-            ring[(r, b, idx)] = n
-            keep_mask.append(n <= dlim)
         # evict buckets that fell out of their rule's ring
-        for k in [
-            (r, b, i)
-            for (r, b, i) in ring
-            if b <= max_bucket.get(r, -1) - buckets_count
-        ]:
+        for k in [k for k in ring if k[1] <= newest[k[0]] - buckets_count]:
             del ring[k]
         keys = list(ring.keys())
         state.update(
@@ -369,7 +408,7 @@ def throttle_stream(
         )
         if limiter_expiration_ms:
             state.setTimeoutDuration(limiter_expiration_ms)
-        out = pdf[pd.Series(keep_mask, index=pdf.index)]
+        out = pdf[pd.Series(keep, index=pdf.index)]
         if len(out):
             yield out[data_cols]
 

@@ -30,8 +30,8 @@ ARROW_PY_ALLOWED = {
     # throttle's exact limit_distribution is JVM-side since r13 (a
     # generated aggregate() fold), so the throttle_modes dist leg runs
     # under the strict no-Python bar above; the Arrow replay survives
-    # only as the map-schema fallback (exact_backend: arrow), parity-
-    # tested in test_throttle_dist
+    # only as the backend for schemas the fold can't sort (maps,
+    # variants), parity-tested in test_throttle_dist
 }
 
 

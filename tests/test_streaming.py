@@ -553,6 +553,52 @@ def test_throttle_stream_keyless_and_numeric_epoch(spark, stream_reader):
     assert got == [0, 2], got
 
 
+@pytest.mark.parametrize("interval", ["100ms", "1500ms"])
+def test_throttle_stream_subsecond_buckets_match_batch(
+    spark, stream_reader, tmp_path, interval
+):
+    """Batch and stream share one bucket id (floor of the event's
+    micros over the interval), so sub-second and fractional-second
+    intervals admit the same events in both modes — the stream used
+    to truncate the interval to whole seconds (100ms divided by zero,
+    1500ms ran 1-s buckets)."""
+    from file_d_spark import Pipeline
+
+    # two keys, one event every 30 ms over 3 s
+    rows = [
+        {
+            "k": k,
+            "ts": f"2024-01-01T00:00:{i * 30 // 1000:02d}.{i * 30 % 1000:03d}Z",
+            "i": i + (0 if k == "a" else 1000),
+        }
+        for k in ("a", "b")
+        for i in range(100)
+    ]
+    schema = "k string, ts timestamp, i long"
+    p = Pipeline.from_dict(
+        {
+            "actions": [
+                {
+                    "type": "throttle",
+                    "throttle_field": "k",
+                    "time_field": "ts",
+                    "bucket_interval": interval,
+                    "buckets_count": 1000,
+                    "default_limit": 3,
+                }
+            ]
+        }
+    )
+    stream = p.apply(stream_reader(rows, schema))
+    batch = p.apply(spark.read.schema(schema).json(str(tmp_path / "in")))
+    want = sorted(r.i for r in batch.collect())
+    assert 0 < len(want) < len(rows)  # the limiter bit
+    name = f"thr_sub_{interval}"
+    _run_stream(stream, name, want_rows=len(want))
+    got = sorted(r.i for r in spark.sql(f"SELECT i FROM {name}").collect())
+    assert got == want
+
+
 def test_multiline_stream_max_event_size_and_missing_source(spark, stream_reader):
     """max_event_size caps the joined value exactly like the batch
     substring; a stream without the source column runs as

@@ -4,6 +4,27 @@
 from file_d_spark import Pipeline
 
 
+def _kept_per_backend(spark, rows, schema, cfg):
+    """Run one throttle config over the same rows twice: as they are
+    (JVM fold) and with an extra map<string,string> column, which the
+    schema routes to the Arrow replay.  Returns the sorted kept ``n``
+    per backend and checks that only the map schema plans Python."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(rows, schema)
+    frames = {
+        "jvm": df,
+        "arrow": df.withColumn("tags", F.create_map(F.lit("k"), F.col("k"))),
+    }
+    kept = {}
+    for backend, frame in frames.items():
+        out = Pipeline.from_dict({"actions": [cfg]}).apply(frame)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("FlatMapGroupsInPandas" in plan) == (backend == "arrow"), backend
+        kept[backend] = sorted(r.n for r in out.collect())
+    return kept
+
+
 def test_throttle_limit_distribution(spark):
     rows = []
     for i in range(30):
@@ -169,8 +190,6 @@ def test_throttle_dist_backends_bit_parity(spark):
     (gated rows bypass both paths uncounted)."""
     import random
 
-    from file_d_spark import Pipeline
-
     rng = random.Random(13)
     sevs = ["error", "warn", "info", "debug", ""]
     rows = []
@@ -226,13 +245,7 @@ def test_throttle_dist_backends_bit_parity(spark):
             "ratios": [{"ratio": 0.4, "values": ["error", "warn"]}],
         },
     }
-    df = spark.createDataFrame(rows, schema)
-    outs = {}
-    for backend in ("jvm", "arrow"):
-        p = Pipeline.from_dict(
-            {"actions": [{**cfg, "exact_backend": backend}]}
-        )
-        outs[backend] = sorted(r.n for r in p.apply(df).collect())
+    outs = _kept_per_backend(spark, rows, schema, cfg)
     assert outs["jvm"] == outs["arrow"]
     assert 0 < len(outs["jvm"]) < 400  # the throttle actually bit
 
@@ -246,8 +259,6 @@ def test_throttle_dist_backends_parity_more_shapes(spark):
     without consuming budget (the documented quadratic-caveat shape)
     interleaved with oversized events."""
     import random
-
-    from file_d_spark import Pipeline
 
     schema = (
         "k string, time string, severity string, ns string,"
@@ -312,13 +323,7 @@ def test_throttle_dist_backends_parity_more_shapes(spark):
         ("zero_reserve", zero_reserve, ["x"]),
         ("zero_size", zero_size, ["", "x" * 5, "x" * 60]),
     ):
-        df = spark.createDataFrame(corpus(7, bodies), schema)
-        outs = {}
-        for backend in ("jvm", "arrow"):
-            p = Pipeline.from_dict(
-                {"actions": [{**cfg, "exact_backend": backend}]}
-            )
-            outs[backend] = sorted(r.n for r in p.apply(df).collect())
+        outs = _kept_per_backend(spark, corpus(7, bodies), schema, cfg)
         assert outs["jvm"] == outs["arrow"], name
         assert 0 < len(outs["jvm"]) < 300, name  # admission actually bit
 

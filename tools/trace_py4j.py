@@ -5,8 +5,8 @@ is called from 30 queries is a bigger target than a 500-trip site used
 once.
 
 For each trip, walks the Python stack to the innermost frame inside
-the repo (file_d_spark/ or tools/ excluded py4j+pyspark), and counts
-(file:line). Prints the top sites with their per-query spread.
+the repo other than this script's own (py4j and pyspark lie outside
+it), and counts (file:line). Prints the top sites with their per-query spread.
 
 Usage: python tools/trace_py4j.py [sf_dir] [names...]
 """
@@ -65,14 +65,17 @@ def main():
         release_caches()
 
     cs.ClientServerConnection.send_command = attributing
-    for name in names:
-        CURRENT["q"] = name
-        df = QUERIES[name](spark, sf_dir)
-        df.schema
+    try:
+        for name in names:
+            CURRENT["q"] = name
+            df = QUERIES[name](spark, sf_dir)
+            df.schema
+            CURRENT["q"] = None
+            spark.catalog.clearCache()
+            release_caches()
+    finally:
+        cs.ClientServerConnection.send_command = orig
         CURRENT["q"] = None
-        spark.catalog.clearCache()
-        release_caches()
-    cs.ClientServerConnection.send_command = orig
 
     total = sum(SITES.values())
     print(f"TOTAL attributed trips: {total}", file=sys.stderr)
